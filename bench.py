@@ -56,9 +56,9 @@ def time_query(
     measured once more at most — their variance is negligible and the
     suite has grown past 200 queries, so 3x-ing every sub-second query
     would dominate the harness wall-clock. Returning the LIST (the
-    median is derived downstream) makes every future cold-vs-warm or
-    shared-cache attribution dispute decidable from the committed
-    BENCH.json record instead of requiring a re-measurement session."""
+    median is derived downstream) makes every future cold-vs-warm
+    dispute decidable from the committed BENCH.json record instead of
+    requiring a re-measurement session."""
     from hds_functions_spark.caching import release_operator_caches
 
     timings: list[float] = []
@@ -132,7 +132,7 @@ def main() -> None:
     # The bench_compare gate only flags REGRESSIONS (>2x), which the
     # pre-warm cannot manufacture, so the gate stays sound; when a
     # head query's improvement matters for a claim, either cite a
-    # fresh-session A/B (tools/drift_ab_r12.py) or re-freeze its
+    # fresh-session A/B (BASELINE.md, r12 drift A/B) or re-freeze its
     # baseline under the current protocol (tools/freeze_baselines.py).
     prewarm_head = int(os.environ.get("BENCH_PREWARM_HEAD", "16"))
     from hds_functions_spark.caching import release_operator_caches

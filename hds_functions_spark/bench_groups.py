@@ -1,82 +1,4 @@
-"""Session-shared-cache query groups: the bench-gating unit for
-queries whose cost attribution shifts with suite order.
+"""Empty since the registry queries stopped sharing session caches; kept
+because the benchmark's self-tests import ``SHARED_CACHE_GROUPS``."""
 
-Several registry queries consume a SESSION-SHARED artifact that is
-built once and cached for the life of the SparkSession (the r10
-BASELINE.md observation: "the GROUP total is the stable unit"):
-
-- ``winnow_fps``   — the persisted winnowing fingerprint table
-  (``registry_ext4._shared_winnow_fps``)
-- ``clusters``     — the connected-components cluster table
-  (``registry_ext._shared_clusters``; ``dedup_clusters_build``
-  deliberately resets + rebuilds it, paying cold cost by design)
-- ``sim_edges``    — the similarity edge list
-  (``registry_ext4._shared_sim_edges``)
-- ``kmeans_centroids`` — the trained k-means centroids (driver-side
-  scalar list, ``registry_ext2._shared_kmeans_centroids``)
-- ``ivf_index`` / ``pq_index`` — the persisted ANN index artifacts
-  (``registry_ext8._ivf_persisted_index`` / ``_pq_persisted_index``)
-- ``edc_index``    — the persisted decontam-corpus IVF index
-  (``registry_ext8._edc_persisted_index``; consumed directly by
-  ``decontam_embedding`` and transitively — via that query's function
-  — by the agreement audit and the purge pipeline)
-
-Whichever group member runs FIRST in a session pays the one-time
-build; every later member runs warm. A per-query ratio gate therefore
-produces order-dependent false flags (the r10 ``dedup_source_matrix``
-investigation) — ``tools/bench_compare.py`` gates ``sum(group)``
-instead and reports members informationally.
-
-``tests/test_registry.py`` re-derives this map from the registry
-source by pattern-matching the ``_shared_*``/``_*_persisted_index``
-call sites, so a new consumer or a renamed query fails the suite here
-rather than silently escaping its group.
-"""
-
-from __future__ import annotations
-
-#: group name -> sorted list of registered query names sharing one
-#: session-scoped cache. Keep sorted; the consistency test compares
-#: against the source-derived map exactly.
-SHARED_CACHE_GROUPS: dict[str, list[str]] = {
-    "winnow_fps": [
-        "dedup_source_matrix",
-        "dedup_winnowing",
-        "dedup_winnowing_incremental",
-    ],
-    "clusters": [
-        "dedup_cluster_sizes",
-        "dedup_clusters_build",
-        "dedup_clusters_cc",
-        "dedup_soft_weights",
-        "pipeline_best_of_cluster",
-        "pipeline_data_card",
-        "split_leakage_safe",
-    ],
-    "sim_edges": [
-        "graph_pagerank_weighted",
-        "graph_triangles",
-    ],
-    "kmeans_centroids": [
-        "cluster_kmeans",
-        "cluster_kmeans_profile",
-        "cluster_semantic_dedup",
-        "clustering_tree_assign",
-        "pipeline_semantic_prep",
-    ],
-    "ivf_index": [
-        "similarity_index_drift",
-        "similarity_ivf_ingest_assign",
-        "similarity_ivf_probe_incremental",
-    ],
-    "pq_index": [
-        "similarity_pq_ingest_codes",
-        "similarity_pq_probe_incremental",
-        "streaming_pq_ingest",
-    ],
-    "edc_index": [
-        "decontam_agreement",
-        "decontam_embedding",
-        "pipeline_decontam_purge",
-    ],
-}
+SHARED_CACHE_GROUPS: dict[str, list[str]] = {}

@@ -14,10 +14,6 @@ harness after its no-op write, a pipeline between stages) calls
 :func:`release_operator_caches`. Releasing is always SAFE — an unpersisted
 DataFrame recomputes on next use — it only costs recompute time if called
 mid-consumption.
-
-The session-shared clusters table (``registry_ext._shared_clusters``) is
-deliberately NOT tracked here: it is a cross-query cache with its own
-keyed lifecycle and explicit ``reset_shared_clusters`` API.
 """
 
 from __future__ import annotations
@@ -36,17 +32,10 @@ def tracked_persist(
     """``df.persist(level)`` + registration for later bulk release.
 
     A frame that is ALREADY persisted is returned unchanged and NOT
-    tracked: its lifecycle belongs to whoever persisted it first.
-    Re-persisting would be a no-op, but tracking the handle would hand
-    :func:`release_operator_caches` the power to unpersist a
-    cross-query shared cache (e.g. the session-shared winnowing
-    fingerprint table) behind its owner's back — the owner's cache
-    dict still holds the handle, so every later consumer silently
-    recomputes the upstream on EVERY scan. That was the r10
-    winnowing-family bench anomaly: the shared fps table was tracked
-    via its first consumer, released between bench repeats, and
-    'warm' runs then re-ran the whole fingerprint extraction 2-3x per
-    query (root-caused r11; see BASELINE.md)."""
+    tracked: its lifecycle belongs to whoever persisted it first, and
+    :func:`release_operator_caches` must not unpersist it behind that
+    owner's back (every later scan would silently recompute the
+    upstream; see BASELINE.md, r10-r11)."""
     if df.storageLevel != StorageLevel.NONE:
         return df  # caller-managed persistence — do not adopt ownership
     df = df.persist(level)

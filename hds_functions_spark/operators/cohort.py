@@ -278,7 +278,6 @@ def apply_inclusion_criteria(
     person_id_col: str = "person_id",
     drop_inclusion_flags: bool = True,
     table_directory=None,
-    cache_flags: bool = True,
 ) -> DataFrame:
     """Filter ``cohort`` to rows passing every criterion; optionally persist
     an attrition flowchart table.
@@ -289,8 +288,10 @@ def apply_inclusion_criteria(
 
     Improvements over the reference (semantics unchanged): when a flowchart
     is requested the flagged plan is consumed twice (flowchart aggregation +
-    final filter) — ``cache_flags=True`` caches it across the two actions
-    instead of recomputing; ``table_directory`` is forwarded to
+    final filter), so it is persisted through
+    :func:`~hds_functions_spark.caching.tracked_persist` (freed by
+    :func:`~hds_functions_spark.caching.release_operator_caches`) instead
+    of recomputed; ``table_directory`` is forwarded to
     :func:`~hds_functions_spark.sources.tables.save_table`.
     """
     validate_inclusion_criteria(cohort, inclusion_criteria)
@@ -299,10 +300,10 @@ def apply_inclusion_criteria(
     cohort_flagged = create_inclusion_columns(cohort, inclusion_criteria)
 
     if flowchart_table:
+        from ..caching import tracked_persist
         from ..sources.tables import save_table
 
-        if cache_flags:
-            cohort_flagged = cohort_flagged.cache()
+        cohort_flagged = tracked_persist(cohort_flagged)
         flowchart = create_inclusion_flowchart(
             cohort_flagged, inclusion_criteria, row_id_col, person_id_col
         )

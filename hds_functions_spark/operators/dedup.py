@@ -102,7 +102,7 @@ def _shingle_hashes(text_col: Column, shingle_size: int) -> Column:
 #: emits ~n^2/2 candidate pairs from ONE join key — skew that AQE cannot
 #: fix, because both its skew-join splitter and its partition coalescing
 #: are shuffle-BYTE based while this skew lives in join OUTPUT (the r17
-#: probe, tools/skew_probe_r17.py, measured a 4000-row synthetic hot
+#: skew probe, recorded in OPTIMIZATION_r17.md, measured a 4000-row hot
 #: bucket as a SINGLE 35 s task emitting 16M rows while 31 cores idled,
 #: with `aqe_skew_reader_fired: false`). Buckets above this row count
 #: are split into an S x S grid of sub-join cells (S = ceil(n / chunk)):
@@ -1669,7 +1669,7 @@ def exact_substring_spans(
     trades one extra scan + hash pass for zero cache footprint; the
     projection is cheap relative to the exchange, so this is the
     honest choice when even local disk is tight). The 16x A/B backing
-    the default is in tools/scaleup_r8.py / BASELINE.md.
+    the default is in BASELINE.md (round-9 grams-persist A/B).
 
     Documents shorter than ``min_len`` have no grams and yield no spans
     (``F.sequence`` would count DOWN for them, hence the explicit

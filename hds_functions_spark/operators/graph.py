@@ -66,7 +66,7 @@ def pagerank(
     node — the small side of the computation — so either write is
     cheap relative to the per-round contribution join. Plan size
     between truncations grows ~3^cadence: keep ``checkpoint_every``
-    <= 3 (see tools/scaleup_r8.py for the cadence A/B).
+    <= 3 (see BASELINE.md, round 9, for the cadence A/B).
     Determinism note: the per-iteration rank rounding keeps engines
     aligned as long as the transition weights themselves are computed
     identically — exact-dyadic weights (e.g. MinHash est_jaccard =

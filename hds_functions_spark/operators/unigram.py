@@ -232,13 +232,19 @@ def _prune_py(cnts: "dict[str, int]", max_vocab: int) -> "dict[str, int]":
 def _smoothed_probs_py(cnts: "dict[str, int]") -> "dict[str, float]":
     """M-step: Laplace-smoothed piece probabilities ``p = (cnt + 1) /
     (total + |vocab|)``, computed on the driver. All operands are
-    Python ints far below 2**53, so int->double conversion is exact on
-    both engines and the single IEEE division is bit-identical to the
-    former Spark ``cast("double")`` division (CPython's int/int true
-    division is correctly rounded). Smoothing keeps every kept piece
-    strictly positive, so no zero-probability path can make the DP
+    Python ints below 2**53 (checked: ValueError otherwise), so
+    int->double conversion is exact on both engines and the single
+    IEEE division is bit-identical to the former Spark
+    ``cast("double")`` division (CPython's int/int true division is
+    correctly rounded). Smoothing keeps every kept piece strictly
+    positive, so no zero-probability path can make the DP
     degenerate."""
     total, nv = sum(cnts.values()), len(cnts)
+    if total + nv >= 2**53:
+        raise ValueError(
+            f"piece counts too large for exact doubles: total + |vocab| = "
+            f"{total + nv} >= 2**53"
+        )
     return {p: (c + 1) / (total + nv) for p, c in cnts.items()}
 
 

@@ -141,12 +141,12 @@ def clustering_tree_assign(spark, sf_dir):
     broadcast path); each vector crosses ONE exchange keyed by its
     probed coarse cells (fanout typically 1-2)."""
     from .operators.clustering import kmeans_assign
-    from .registry_ext2 import _KM_RD, _shared_kmeans_centroids
+    from .registry_ext2 import _KM_RD, _kmeans_centroids
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned = kmeans_assign(
         emb,
-        _shared_kmeans_centroids(spark, sf_dir),
+        _kmeans_centroids(spark, sf_dir),
         method="tree",
         id_col="vec_id",
     )

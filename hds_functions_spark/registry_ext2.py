@@ -110,27 +110,15 @@ c{it} AS (
 
 _KM_FINAL = f"asn{_KM_ITER + 1}"
 
-#: Session-scoped fitted-centroid cache, keyed by (applicationId, sf_dir)
-#: — same lifecycle idea as ``registry_ext._shared_clusters``, but the
-#: fit result is k*dim driver-side floats, so there is nothing to persist
-#: or unpersist: both cluster_* queries share one fit (4 Spark jobs) and
-#: re-assignment is a single codegen projection.
-_KMEANS_CACHE: dict[tuple[str, str], list[list[float]]] = {}
-
-
-def _shared_kmeans_centroids(spark, sf_dir) -> list[list[float]]:
+def _kmeans_centroids(spark, sf_dir) -> list[list[float]]:
+    """The fitted k-means centroids of the embedding corpus: k*dim
+    driver-side floats, so assignment is a single codegen projection."""
     from .operators.clustering import kmeans_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _KMEANS_CACHE.get(key)
-    if cents is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        cents = kmeans_fit(
-            emb, k=_KM_K, n_iter=_KM_ITER, dim=_KM_DIM,
-            round_digits=_KM_RD,
-        )
-        _KMEANS_CACHE[key] = cents
-    return cents
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return kmeans_fit(
+        emb, k=_KM_K, n_iter=_KM_ITER, dim=_KM_DIM, round_digits=_KM_RD,
+    )
 
 
 @_register(
@@ -151,7 +139,7 @@ def cluster_kmeans(spark, sf_dir):
     from .operators.clustering import kmeans_assign
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned = kmeans_assign(emb, _shared_kmeans_centroids(spark, sf_dir))
+    assigned = kmeans_assign(emb, _kmeans_centroids(spark, sf_dir))
     return assigned.select(
         "vec_id", "cluster", F.round("dist", _KM_RD).alias("dist")
     )
@@ -193,7 +181,7 @@ def cluster_kmeans_profile(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )
-    assigned = kmeans_assign(emb, _shared_kmeans_centroids(spark, sf_dir))
+    assigned = kmeans_assign(emb, _kmeans_centroids(spark, sf_dir))
     counts = assigned.groupBy("cluster", "label").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -553,13 +541,12 @@ WHERE a.vec_id NOT IN (
 def cluster_semantic_dedup(spark, sf_dir):
     """SemDeDup end-to-end: k-means bucketing -> within-cluster dot >=
     0.25 pairs (quadratic in CLUSTER size only, never corpus size) ->
-    greedy keep-lowest-id. Returns the surviving (vec_id, cluster) rows.
-    Shares the session centroid cache with the other cluster queries."""
+    greedy keep-lowest-id. Returns the surviving (vec_id, cluster) rows."""
     from .operators.clustering import semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     kept = semantic_dedup(
-        emb, _shared_kmeans_centroids(spark, sf_dir),
+        emb, _kmeans_centroids(spark, sf_dir),
         threshold=_SD_THRESHOLD,
     )
     return kept.select("vec_id", "cluster")
@@ -983,11 +970,11 @@ def dedup_cluster_sizes(spark, sf_dir):
     """Near-dup component-size histogram — THE dedup report (how much
     of the corpus sits in how-big duplicate families; a heavy tail here
     means a hot component and motivates the banded pair caps). Two
-    count aggregates over the session-shared persisted clusters table —
-    the expensive MinHash + connected-components work is not repeated."""
-    from .registry_ext import _shared_clusters
+    count aggregates over the MinHash + connected-components clusters
+    table."""
+    from .registry_ext import _clusters
 
-    cl = _shared_clusters(spark, sf_dir)
+    cl = _clusters(spark, sf_dir)
     sizes = cl.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
     return sizes.groupBy("size").agg(
         F.count(F.lit(1)).alias("n_clusters")
@@ -1513,7 +1500,7 @@ def pipeline_semantic_prep(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     surv = semantic_dedup(
-        emb, _shared_kmeans_centroids(spark, sf_dir),
+        emb, _kmeans_centroids(spark, sf_dir),
         threshold=_SD_THRESHOLD,
     ).select(F.col("vec_id").alias("doc_id"), "cluster")
     docs = add_quality_score(

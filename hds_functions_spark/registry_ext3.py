@@ -339,18 +339,22 @@ _SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
 @_register("split_leakage_safe", None)  # oracle attached below
 def split_leakage_safe(spark, sf_dir):
     """Cluster-aware corpus split: every near-duplicate family (the
-    session-shared MinHash+CC clusters table) moves to ONE split, so a
+    MinHash+CC clusters table) moves to ONE split, so a
     benchmark built from the test split cannot be contaminated by a
     train-side near-copy. Emits per-split document and group counts plus
     ``n_straddling`` — components spanning more than one split, zero by
     construction, computed (not assumed) so the oracle verifies the
     guarantee itself. One id-equi-join against the cluster map + a pure
     hash projection; the audit is two tiny aggregates."""
+    from .caching import tracked_persist
     from .operators.sampling import leakage_safe_split
-    from .registry_ext import _shared_clusters
+    from .registry_ext import _clusters
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    clusters = _shared_clusters(spark, sf_dir).select("doc_id", "component")
+    # the split feeds both the per-split counts and the straddle audit
+    clusters = tracked_persist(
+        _clusters(spark, sf_dir).select("doc_id", "component")
+    )
     s = leakage_safe_split(docs, clusters, "doc_id", _SPLIT_WEIGHTS)
     straddle = (
         s.groupBy("_split_group")

@@ -96,44 +96,21 @@ FROM corners GROUP BY 1
 """
 
 
-#: Session-scoped cache of the thresholded similarity-edge table —
-#: the production shape: the similarity graph is built ONCE and every
-#: graph consumer (CC dedup, triangles, degree audits) reads the
-#: persisted table instead of re-running MinHash + banding. Same
-#: pattern (and lifecycle) as registry_ext._CLUSTERS_CACHE.
-_SIM_EDGES_CACHE: dict = {}
-
-
-def _shared_sim_edges(spark, sf_dir):
-    from pyspark import StorageLevel
-
+def _sim_edges(spark, sf_dir):
+    """The thresholded MinHash similarity-edge table of the corpus: LSH
+    candidate pairs ``(id_a, id_b, est_jaccard)`` with est_jaccard >= 0.5."""
     from .operators.dedup import minhash_pairs
     from .registry_ext import _MH_BANDS, _MH_NUM_HASHES, _MH_SHINGLE
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIM_EDGES_CACHE.get(key)
-    if df is None:
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.length("text") >= _MH_SHINGLE
-        )
-        df = minhash_pairs(
-            docs,
-            num_hashes=_MH_NUM_HASHES,
-            shingle_size=_MH_SHINGLE,
-            bands=_MH_BANDS,
-        ).filter(
-            F.col("est_jaccard") >= _TRI_MIN_JACCARD
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _SIM_EDGES_CACHE[key] = df
-    return df
-
-
-def reset_shared_sim_edges(spark, sf_dir) -> None:
-    """Drop the session-scoped edge table (the cold path)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIM_EDGES_CACHE.pop(key, None)
-    if df is not None:
-        df.unpersist()
+    docs = _t(spark, sf_dir, "documents").filter(
+        F.length("text") >= _MH_SHINGLE
+    )
+    return minhash_pairs(
+        docs,
+        num_hashes=_MH_NUM_HASHES,
+        shingle_size=_MH_SHINGLE,
+        bands=_MH_BANDS,
+    ).filter(F.col("est_jaccard") >= _TRI_MIN_JACCARD)
 
 
 @_register("graph_triangles", None)  # oracle attached below
@@ -145,12 +122,13 @@ def graph_triangles(spark, sf_dir):
     near-clique, many triangles) from bridge documents chaining two
     unrelated clusters together (few). Degree-ordered compact-forward
     scheme — sum(outdeg^2) <= m^1.5 wedge fanout, each triangle found
-    once at its smallest apex; see operators/graph.py:triangle_count.
-    Edges come from the session-shared persisted similarity-edge table
-    (built once per session, like the clusters table)."""
+    once at its smallest apex; see operators/graph.py:triangle_count."""
+    from .caching import tracked_persist
     from .operators.graph import triangle_count
 
-    return triangle_count(_shared_sim_edges(spark, sf_dir), "id_a", "id_b")
+    # triangle_count reads its edge list three times before it persists
+    edges = tracked_persist(_sim_edges(spark, sf_dir))
+    return triangle_count(edges, "id_a", "id_b")
 
 
 ORACLES["graph_triangles"] = _duck_triangles_sql()
@@ -446,35 +424,16 @@ GROUP BY 1, 2 HAVING count(*) >= {_WN_MIN_SHARED}
 """
 
 
-#: Session-scoped cache of the df-capped-input winnowing fingerprint
-#: table (doc_id, fingerprint) — built once, consumed by the full pair
-#: build AND the incremental probe.
-_WINNOW_FP_CACHE: dict = {}
-
-
-def _shared_winnow_fps(spark, sf_dir):
-    from pyspark import StorageLevel
-
+def _winnow_fps(spark, sf_dir):
+    """The winnowing fingerprint table ``(doc_id, fingerprint)`` of the
+    corpus."""
     from .operators.dedup import winnowing_fingerprints
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _WINNOW_FP_CACHE.get(key)
-    if df is None:
-        df = winnowing_fingerprints(
-            _t(spark, sf_dir, "documents").select("doc_id", "text"),
-            gram_size=_WN_GRAM,
-            window=_WN_WINDOW,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _WINNOW_FP_CACHE[key] = df
-    return df
-
-
-def reset_shared_winnow_fps(spark, sf_dir) -> None:
-    """Drop the session-scoped fingerprint table (the cold path)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _WINNOW_FP_CACHE.pop(key, None)
-    if df is not None:
-        df.unpersist()
+    return winnowing_fingerprints(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        gram_size=_WN_GRAM,
+        window=_WN_WINDOW,
+    )
 
 
 @_register("dedup_winnowing", None)  # oracle attached below
@@ -490,7 +449,7 @@ def dedup_winnowing(spark, sf_dir):
     from .operators.dedup import winnowing_overlap_pairs
 
     return winnowing_overlap_pairs(
-        _shared_winnow_fps(spark, sf_dir),
+        _winnow_fps(spark, sf_dir),
         min_shared=_WN_MIN_SHARED,
         max_doc_freq=_WN_MAX_DF,
     )
@@ -662,9 +621,10 @@ def dedup_winnowing_incremental(spark, sf_dir):
     batch together, which makes the emitted slice provably identical
     to the full pair build restricted to batch-touching pairs (pinned
     by test). See operators/dedup.py:winnowing_overlap_incremental."""
+    from .caching import tracked_persist
     from .operators.dedup import winnowing_overlap_incremental
 
-    fps = _shared_winnow_fps(spark, sf_dir)
+    fps = tracked_persist(_winnow_fps(spark, sf_dir))  # read by both sides
     is_new = F.col("doc_id") % _WNI_MOD == 0
     return winnowing_overlap_incremental(
         fps.filter(is_new),
@@ -889,19 +849,19 @@ r{i} AS (
 
 @_register("graph_pagerank_weighted", None)  # oracle attached below
 def graph_pagerank_weighted(spark, sf_dir):
-    """Similarity-WEIGHTED PageRank over the shared MinHash edge table:
+    """Similarity-WEIGHTED PageRank over the MinHash edge table:
     rank flows proportionally to est_jaccard, so a document central to
     a tight near-duplicate neighbourhood outranks one with the same
     degree but weaker ties — the curation centrality signal (which dup
     is the canonical one?) that complements triangle counts (local
-    density) and CC (membership) on the SAME persisted graph.
+    density) and CC (membership) on the SAME graph.
     est_jaccard values are exact dyadic rationals (k/32), so
     out-strength sums and transition weights are bit-reproducible in
     any engine — the unrolled-CTE oracle proves every iteration.
     See operators/graph.py:pagerank (weight_col)."""
     from .operators.graph import pagerank
 
-    pairs = _shared_sim_edges(spark, sf_dir)
+    pairs = _sim_edges(spark, sf_dir)
     edges = pairs.select(
         F.explode(
             F.array(

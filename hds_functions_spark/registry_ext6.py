@@ -345,24 +345,15 @@ codes AS (
     return "WITH " + "".join(parts)
 
 
-#: session-scoped PQ codebook cache (driver-side floats; nothing to
-#: unpersist), keyed like registry_ext2's _KMEANS_CACHE
-_PQ_CACHE: dict[tuple[str, str], list] = {}
-
-
-def _shared_pq_codebooks(spark, sf_dir):
+def _pq_codebooks(spark, sf_dir):
+    """PQ codebooks trained on the embedding corpus (driver-side floats)."""
     from .operators.similarity import pq_train
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_CACHE.get(key)
-    if books is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        books = pq_train(
-            emb, m=_PQ_M, k=_PQ_K, n_iter=_PQ_ITER, dim=_PQ_DIM,
-            round_digits=_PQ_RD,
-        )
-        _PQ_CACHE[key] = books
-    return books
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return pq_train(
+        emb, m=_PQ_M, k=_PQ_K, n_iter=_PQ_ITER, dim=_PQ_DIM,
+        round_digits=_PQ_RD,
+    )
 
 
 @_register(
@@ -384,7 +375,7 @@ def similarity_pq_codes(spark, sf_dir):
     from .operators.similarity import pq_encode
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return pq_encode(emb, _shared_pq_codebooks(spark, sf_dir))
+    return pq_encode(emb, _pq_codebooks(spark, sf_dir))
 
 
 @_register(
@@ -430,7 +421,7 @@ def similarity_pq_adc_knn(spark, sf_dir):
     WindowGroupLimit.""".format(k=_PQ_TOPK, m=_PQ_M, d=_PQ_DIM)
     from .operators.similarity import pq_adc_topk, pq_encode
 
-    books = _shared_pq_codebooks(spark, sf_dir)
+    books = _pq_codebooks(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     codes = pq_encode(emb, books)
     queries = emb.filter(F.col("vec_id") % _PQ_QUERY_MOD == 0).select(
@@ -805,23 +796,15 @@ FROM embeddings e CROSS JOIN mean m CROSS JOIN v1f p CROSS JOIN v2f q
 """
 
 
-#: session-scoped fitted-PCA cache (driver floats), the _PQ_CACHE pattern
-_PCA_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def _shared_pca(spark, sf_dir):
+def _pca_fit(spark, sf_dir):
+    """``(mean, components)`` of the embedding corpus (driver floats)."""
     from .operators.similarity import pca_power_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fit = _PCA_CACHE.get(key)
-    if fit is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        fit = pca_power_components(
-            emb, n_components=_PCA_C, n_iter=_PCA_ITER, dim=_PCA_DIM,
-            round_digits=_PCA_RD,
-        )
-        _PCA_CACHE[key] = fit
-    return fit
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return pca_power_components(
+        emb, n_components=_PCA_C, n_iter=_PCA_ITER, dim=_PCA_DIM,
+        round_digits=_PCA_RD,
+    )
 
 
 @_register("embedding_pca_projection", _duck_pca_projection_sql())
@@ -837,7 +820,7 @@ def embedding_pca_projection(spark, sf_dir):
     association, same per-iteration rounding."""
     from .operators.similarity import pca_project
 
-    mu, comps = _shared_pca(spark, sf_dir)
+    mu, comps = _pca_fit(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return pca_project(emb, mu, comps, round_digits=_PCA_OUT_RD)
 
@@ -882,7 +865,7 @@ def embedding_pca_variance(spark, sf_dir):
     isotropic. One aggregate over the projections; shares round last."""
     from .operators.similarity import pca_project
 
-    mu, comps = _shared_pca(spark, sf_dir)
+    mu, comps = _pca_fit(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     proj = pca_project(emb, mu, comps, round_digits=_PCA_OUT_RD)
     v = F.col("embedding").cast("array<double>")

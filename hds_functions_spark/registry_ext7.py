@@ -622,18 +622,18 @@ def dedup_source_matrix(spark, sf_dir):
     """Cross-source verbatim-copy matrix: distinct winnowing
     fingerprints shared by each source pair — the provenance audit
     behind mixture decisions (re-crawl detection), rolled up from the
-    MOSS copy detector. Reuses the session-cached df-capped fingerprint
-    table shared with dedup_winnowing; the matrix build collapses to
+    MOSS copy detector, over the same fingerprint table as
+    dedup_winnowing; the matrix build collapses to
     DISTINCT (source, fingerprint) before self-joining, so fanout is
     at most S^2 per fingerprint with S = source count — no doc x doc
     blowup, no hot-fp cap (operators/dedup.py:source_overlap_matrix)."""
+    from .caching import tracked_persist
     from .operators.dedup import source_overlap_matrix
-    from .registry_ext4 import _shared_winnow_fps
+    from .registry_ext4 import _WN_MAX_DF, _winnow_fps
 
-    from .registry_ext4 import _WN_MAX_DF
-
+    # read twice: by the df cap and by the join it filters
     return source_overlap_matrix(
-        _shared_winnow_fps(spark, sf_dir),
+        tracked_persist(_winnow_fps(spark, sf_dir)),
         _t(spark, sf_dir, "documents").select("doc_id", "source"),
         max_doc_freq=_WN_MAX_DF,
     )
@@ -670,14 +670,15 @@ def dedup_soft_weights(spark, sf_dir):
     document — the reweighting alternative to hard removal (keeps rare
     variants, removes the repetition bias; the "soft dedup" regime in
     recent data-curation work). Per-source rollup: effective document
-    mass and the dedup ratio a mixture plan would correct by. Reuses
-    the session-shared MinHash + connected-components clusters table;
-    the weighting itself is one broadcast-sized size join + one
-    aggregate. Oracle composes the registered clusters oracle."""
-    from .registry_ext import _shared_clusters
+    mass and the dedup ratio a mixture plan would correct by. Reads
+    the MinHash + connected-components clusters table; the weighting
+    itself is one broadcast-sized size join + one aggregate. Oracle
+    composes the registered clusters oracle."""
+    from .caching import tracked_persist
+    from .registry_ext import _clusters
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    comp = _shared_clusters(spark, sf_dir)
+    comp = tracked_persist(_clusters(spark, sf_dir))  # joined and sized
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
     doc_sz = (
         docs.join(comp, on="doc_id", how="left")
@@ -1016,7 +1017,7 @@ FROM base GROUP BY 1
 def pipeline_data_card(spark, sf_dir):
     """The per-source DATA CARD — the one-page artifact a curated corpus
     ships with: document/token volume, English share, mean heuristic
-    quality, soft-dedup ratio (effective docs / docs, from the shared
+    quality, soft-dedup ratio (effective docs / docs, from the
     MinHash+CC clusters) and mean 5-gram novelty, per source, in ONE
     lazy plan. Every column is an already-audited operator
     (add_quality_score, ngram_novelty, dedup_clusters); the rollup adds
@@ -1025,14 +1026,15 @@ def pipeline_data_card(spark, sf_dir):
     from .functions.text import token_count
     from .operators.profiling import ngram_novelty
     from .functions.text import add_quality_score
-    from .registry_ext import _shared_clusters
+    from .caching import tracked_persist
+    from .registry_ext import _clusters
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "lang"
     )
     q = add_quality_score(docs).select("doc_id", "quality_score")
     nov = ngram_novelty(docs.select("doc_id", "text"), ngram=_NOV_NGRAM)
-    comp = _shared_clusters(spark, sf_dir)
+    comp = tracked_persist(_clusters(spark, sf_dir))  # joined and sized
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
     base = (
         docs.select(

@@ -316,3 +316,19 @@ def test_drift_quantizer_rounding_threaded(spark, emb):
     assert sum(r["n_batch"] for r in drift) == 300
     for r in drift:
         assert r["n_corpus"] == r["n_batch"]
+
+
+def test_index_rebuild_keeps_earlier_index_readable(spark, emb):
+    """Each registry index build saves to a directory of its own, so a
+    second build never deletes the files an earlier loaded index reads."""
+    from urllib.parse import urlparse
+
+    import hds_functions_spark.registry_ext  # noqa: F401  (chain order)
+    from hds_functions_spark.registry_ext8 import _ivf_persisted_index
+
+    sf = os.path.dirname(urlparse(emb.inputFiles()[0]).path)
+    first = _ivf_persisted_index(spark, sf)
+    expected = _rows(first)
+    second = _ivf_persisted_index(spark, sf)
+    assert first.inputFiles()[0] != second.inputFiles()[0]
+    assert _rows(first) == expected == _rows(second)

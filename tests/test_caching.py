@@ -95,57 +95,12 @@ def test_observe_metrics_single_pass(spark):
         observe_metrics(df, "t2", {})
 
 
-def test_shared_winnow_fps_cold_and_cached_agree(spark):
-    """The session-scoped winnowing fingerprint cache returns the same
-    table cold (post-reset rebuild) and cached, and both consumers
-    (full pairs + incremental) read one build."""
-    import hds_functions_spark.registry_ext  # noqa: F401  (chain order)
-    from hds_functions_spark.registry_ext4 import (
-        _WINNOW_FP_CACHE,
-        _shared_winnow_fps,
-        reset_shared_winnow_fps,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    cached = sorted(
-        tuple(r) for r in _shared_winnow_fps(spark, sf).collect()
-    )
-    assert (spark.sparkContext.applicationId, sf) in _WINNOW_FP_CACHE
-    reset_shared_winnow_fps(spark, sf)
-    assert (spark.sparkContext.applicationId, sf) not in _WINNOW_FP_CACHE
-    cold = sorted(
-        tuple(r) for r in _shared_winnow_fps(spark, sf).collect()
-    )
-    assert cold == cached
-    reset_shared_winnow_fps(spark, sf)
-
-
-def test_shared_sim_edges_cold_and_cached_agree(spark):
-    import hds_functions_spark.registry_ext  # noqa: F401  (chain order)
-    from hds_functions_spark.registry_ext4 import (
-        _shared_sim_edges,
-        reset_shared_sim_edges,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    cached = sorted(
-        tuple(r) for r in _shared_sim_edges(spark, sf).collect()
-    )
-    reset_shared_sim_edges(spark, sf)
-    cold = sorted(
-        tuple(r) for r in _shared_sim_edges(spark, sf).collect()
-    )
-    assert cold == cached
-    reset_shared_sim_edges(spark, sf)
-
-
 def test_tracked_persist_does_not_adopt_foreign_persist(spark):
-    """The r10 winnowing-family bench anomaly, root-caused: an operator
-    calling tracked_persist on an input that a session-shared cache
+    """An operator calling tracked_persist on an input its caller
     already persisted must NOT track it — otherwise
-    release_operator_caches unpersists the shared frame behind its
-    owner's back and every later consumer silently recomputes the
-    upstream on every scan."""
+    release_operator_caches unpersists the frame behind its owner's
+    back and every later consumer silently recomputes the upstream on
+    every scan (the r10 winnowing-family bench anomaly)."""
     from pyspark import StorageLevel
 
     from hds_functions_spark.caching import (

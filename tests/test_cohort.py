@@ -94,6 +94,27 @@ def test_flowchart_saved_via_table_directory(cohort, tmp_path):
     assert saved.count() == 3
 
 
+def test_flowchart_flagged_frame_is_tracked_and_released(cohort, tmp_path):
+    """The flagged frame persisted for the flowchart is tracked, so the
+    bulk release frees it instead of leaking it for the session."""
+    from hds_functions_spark.caching import release_operator_caches, tracked_count
+
+    def reads_cache(df):
+        plan = df.select("*")._jdf.queryExecution().optimizedPlan()
+        return "InMemoryRelation" in plan.toString()
+
+    release_operator_caches()
+    directory = {"fc": {"path": str(tmp_path / "fc"), "format": "parquet"}}
+    out = apply_inclusion_criteria(
+        cohort, CRITERIA, flowchart_table="fc", table_directory=directory
+    )
+    assert tracked_count() == 1
+    assert reads_cache(out)
+    assert release_operator_caches() == 1
+    assert not reads_cache(out)
+    assert sorted(r["row_id"] for r in out.collect()) == [1, 4]
+
+
 def test_validate_inclusion_criteria_errors(cohort):
     with pytest.raises(TypeError, match="must be a dictionary"):
         validate_inclusion_criteria(cohort, [("a", "b")])

@@ -161,56 +161,17 @@ def test_normalise_event_ts_rejects_bad_layouts(spark):
         normalise_event_ts(stringy)
 
 
-def test_shared_cache_groups_match_source():
-    """bench_groups.SHARED_CACHE_GROUPS is the bench-gating unit for
-    session-shared-cache consumers; re-derive the map from the registry
-    SOURCE (call-site pattern match) so a new consumer, a renamed
-    query, or a dropped cache cannot silently escape its group."""
-    import glob
-    import re
+def test_no_module_state_keyed_on_the_spark_application():
+    """No library module keeps state keyed on
+    ``sparkContext.applicationId``: a query's result and cost must not
+    depend on which queries ran before it in the same session."""
+    import pathlib
 
-    from hds_functions_spark.bench_groups import SHARED_CACHE_GROUPS
-    from hds_functions_spark.registry import QUERIES
-    import hds_functions_spark.registry_ext  # noqa: F401
-
-    pats = {
-        "winnow_fps": r"_shared_winnow_fps\(spark",
-        "clusters": r"_shared_clusters\(spark",
-        "sim_edges": r"_shared_sim_edges\(spark",
-        "kmeans_centroids": r"_shared_kmeans_centroids\(spark",
-        "ivf_index": r"_ivf_persisted_index\(spark",
-        "pq_index": r"_pq_persisted_index\(spark",
-        # decontam_embedding consumes the persisted EDC index directly;
-        # the agreement audit and the purge pipeline consume it
-        # TRANSITIVELY by calling decontam_embedding for their ed leg
-        "edc_index": r"_edc_persisted_index\(spark|decontam_embedding\(spark",
-    }
-    derived: dict[str, set] = {g: set() for g in pats}
-    files = glob.glob(
-        "/root/repo/hds_functions_spark/registry*.py"
-    )
-    assert files
-    for path in files:
-        lines = open(path).read().splitlines()
-        for g, p in pats.items():
-            for i, ln in enumerate(lines):
-                if not re.search(p, ln) or re.search(
-                    r"def (_shared|_ivf|_pq|_edc|reset|decontam_embedding)",
-                    ln,
-                ):
-                    continue
-                for j in range(i, -1, -1):
-                    m = re.search(r'@_register\(\s*"?([a-z0-9_]*)"?', lines[j])
-                    if m:
-                        name = m.group(1)
-                        if not name:
-                            m2 = re.search(r'"([a-z0-9_]+)"', lines[j + 1])
-                            name = m2.group(1) if m2 else "?"
-                        derived[g].add(name)
-                        break
-    assert {g: sorted(m) for g, m in derived.items()} == {
-        g: sorted(m) for g, m in SHARED_CACHE_GROUPS.items()
-    }
-    for members in SHARED_CACHE_GROUPS.values():
-        for q in members:
-            assert q in QUERIES, q
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "hds_functions_spark"
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "applicationId" in line
+    ]
+    assert hits == []

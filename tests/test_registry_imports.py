@@ -4,6 +4,7 @@ directly must not depend on the ext-chain import order — each module
 pulls the chain head itself."""
 
 import importlib
+import os
 import subprocess
 import sys
 
@@ -12,6 +13,8 @@ import pytest
 _EXT_MODULES = [
     f"registry_ext{n}" for n in ["", 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13]
 ] + ["registry_web", "registry_subdoc"]
+
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize("mod", _EXT_MODULES)
@@ -22,7 +25,7 @@ def test_ext_module_imports_standalone(mod):
         [sys.executable, "-c", f"import hds_functions_spark.{mod}"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=_REPO_ROOT,
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]

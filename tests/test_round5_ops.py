@@ -416,9 +416,7 @@ def test_pipeline_semantic_prep_invariants(spark):
     import builtins
 
     import __spark_entry__ as e
-    from hds_functions_spark.registry_ext2 import (
-        _shared_kmeans_centroids,
-    )
+    from hds_functions_spark.registry_ext2 import _kmeans_centroids
     from hds_functions_spark.operators.clustering import kmeans_assign
 
     sf = "/root/testdata/sf0.001"
@@ -428,7 +426,7 @@ def test_pipeline_semantic_prep_invariants(spark):
     )
     sizes = {
         r["cluster"]: r["count"]
-        for r in kmeans_assign(emb, _shared_kmeans_centroids(spark, sf))
+        for r in kmeans_assign(emb, _kmeans_centroids(spark, sf))
         .groupBy("cluster").count().collect()
     }
     n_docs = builtins.sum(r["n_docs"] for r in out)

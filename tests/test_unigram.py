@@ -224,3 +224,14 @@ def test_prune_py_tie_break_is_utf8_binary_order():
     assert set(kept) == {"a", "aa", "ab"}
     # and single chars always survive regardless of count
     assert _prune_py({"q": 0, "zz": 9}, 0) == {"q": 0}
+
+
+def test_smoothed_probs_rejects_counts_past_exact_doubles():
+    from hds_functions_spark.operators.unigram import _smoothed_probs_py
+
+    with pytest.raises(ValueError, match="2\\*\\*53"):
+        _smoothed_probs_py({"a": 2**53})
+    with pytest.raises(ValueError, match="2\\*\\*53"):
+        _smoothed_probs_py({"a": 2**53 - 2, "b": 0})
+    # just below the bound: total + |vocab| = 2**53 - 1 is exact
+    assert _smoothed_probs_py({"a": 2**53 - 2}) == {"a": 1.0}

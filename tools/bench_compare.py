@@ -8,14 +8,6 @@ only movements that clear BOTH gates:
 - ratio > ``--ratio`` (default 1.5x, either direction), AND
 - the larger of the two timings > ``--floor`` seconds (default 0.5).
 
-Queries that consume a SESSION-SHARED cache (declared in
-``hds_functions_spark.bench_groups.SHARED_CACHE_GROUPS``) are gated as
-a GROUP TOTAL, not per-query: whichever member runs first in a session
-pays the one-time build, so suite-order rotation moves per-member
-numbers without any plan change (the r10 ``dedup_source_matrix``
-false-flag). Members are still printed informationally. Disable with
-``--no-groups`` to get the raw per-query view.
-
 Usage:
     python tools/bench_compare.py BENCH_r03.json BENCH.json
     python tools/bench_compare.py old.json new.json --ratio 1.5 --floor 0.5
@@ -95,11 +87,6 @@ def main() -> None:
     ap.add_argument("new")
     ap.add_argument("--ratio", type=float, default=1.5)
     ap.add_argument("--floor", type=float, default=0.5)
-    ap.add_argument(
-        "--no-groups",
-        action="store_true",
-        help="gate every query individually (ignore shared-cache groups)",
-    )
     args = ap.parse_args()
 
     old, new = load_queries(args.old), load_queries(args.new)
@@ -113,53 +100,14 @@ def main() -> None:
         f"{sum(new[q] for q in shared):.1f}s"
     )
 
-    grouped: dict[str, str] = {}  # query -> group name
-    if not args.no_groups:
-        try:
-            import os
-
-            sys.path.insert(
-                0,
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            )
-            from hds_functions_spark.bench_groups import SHARED_CACHE_GROUPS
-
-            for gname, members in SHARED_CACHE_GROUPS.items():
-                for q in members:
-                    grouped[q] = gname
-        except ImportError:
-            print("note: bench_groups unavailable — per-query gating only")
-
     flagged = []
     for q in shared:
-        if q in grouped:
-            continue  # gated at group level below
         a, b = old[q], new[q]
         if max(a, b) <= args.floor or min(a, b) <= 0:
             continue
         ratio = b / a
         if ratio > args.ratio or ratio < 1 / args.ratio:
             flagged.append((q, a, b, ratio))
-
-    # group totals: sum over members present in BOTH records (a group
-    # with a new member would otherwise inflate the new side)
-    group_members: dict[str, list[str]] = {}
-    for q in shared:
-        g = grouped.get(q)
-        if g:
-            group_members.setdefault(g, []).append(q)
-    for g, members in sorted(group_members.items()):
-        a = sum(old[q] for q in members)
-        b = sum(new[q] for q in members)
-        detail = ", ".join(
-            f"{q} {old[q]:.2f}->{new[q]:.2f}" for q in members
-        )
-        print(f"group {g}: {a:.2f}s -> {b:.2f}s  [{detail}]")
-        if max(a, b) <= args.floor or min(a, b) <= 0:
-            continue
-        ratio = b / a
-        if ratio > args.ratio or ratio < 1 / args.ratio:
-            flagged.append((f"group:{g}", a, b, ratio))
 
     flagged.sort(key=lambda t: -abs(t[3] - 1))
     if not flagged:
